@@ -179,13 +179,9 @@ def _timeline(events_path: str, t0_ms: float, t1_ms: float, cores: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, required=True)
-    ap.add_argument("--prefetch", type=int, default=0,
-                    help="1 = pipeline next-slice scan under the current "
-                    "merge (rejected at bench shape — see replay()), "
+    ap.add_argument("--pipeline", type=int, default=0, choices=(0, 1),
+                    help="1 = async-commit write-ahead replay, "
                     "0 = sequential (replay default)")
-    ap.add_argument("--pipeline", type=int, default=0,
-                    help="1 = async-commit write-ahead replay, 2 = full "
-                    "stage overlap (see replay(pipeline=))")
     ap.add_argument("--slots", type=int, default=0,
                     help="task slots (local[slots]); default = cores. "
                     "Oversubscribing slots past the pinned core budget "
@@ -257,8 +253,7 @@ def main() -> None:
         spark, log, table,
         batch_span=max(args.events // args.batches, 1),
         extract_text_from_html=True,
-        prefetch=bool(args.prefetch),
-        pipeline=(False, True, "full")[args.pipeline],
+        pipeline=bool(args.pipeline),
     )
     sec = time.perf_counter() - t0
     t1_ms = time.time() * 1000

@@ -371,17 +371,9 @@ def worker(
         # ABSOLUTE cost — profiled at 10-15% of replay wall at 8 cores vs
         # ~3% at 2 — so hiding it is pure wide-config gain, i.e. exactly the
         # serial fraction the two-parallelism criterion exists to catch.
-        # Never two cluster jobs at once ("commit" depth), so no
-        # memory-bandwidth contention is added on this single box.
-        # SPARK_GRAFT_SCALE_PIPELINE=full measures the kept-for-clusters
-        # "full" overlap (scan of slice k+1 under merge of slice k — two
-        # concurrent jobs) so its cost on a bandwidth-capped box is a
-        # recorded number, not an untested claim (r4 VERDICT item 7).
-        pipeline=(
-            "full"
-            if os.environ.get("SPARK_GRAFT_SCALE_PIPELINE") == "full"
-            else True
-        ),
+        # Never two cluster jobs at once, so no memory-bandwidth
+        # contention is added on this single box.
+        pipeline=True,
     )
     sec = time.perf_counter() - t0
     cpu = _cpu_fracs(cpu_a, _cpu_snap(pinned))
@@ -422,7 +414,6 @@ def worker(
         "equivalence_pass": bool(na == ne and ha == he),
         "state_rows": na,
         "cpu_during_timed_window": cpu,
-        "pipeline": os.environ.get("SPARK_GRAFT_SCALE_PIPELINE", "commit"),
     }
     with open(out_file, "w") as f:
         json.dump(result, f)
@@ -711,7 +702,6 @@ def _run_pairs(work: str, log_dir: str, owns_work: bool) -> None:
         "pass_bar": 0.8,
         "pass": eff >= 0.8,
         "equivalence_pass": small["equivalence_pass"] and big["equivalence_pass"],
-        "pipeline": os.environ.get("SPARK_GRAFT_SCALE_PIPELINE", "commit"),
     }
     os.makedirs(os.path.join(REPO, "BENCH", "runs"), exist_ok=True)
     stamp = time.strftime("%Y%m%d-%H%M%S")
@@ -806,8 +796,8 @@ def _archive_rows() -> str:
             result = "PASS" if d["pass"] else "FAIL"
         proto = d.get("protocol", "back-to-back adjacent")
         if d.get("pipeline", "commit") == "full":
-            # diagnostic of the kept-for-clusters full overlap mode, not
-            # the shipped config — labeled and excluded from bracketing
+            # archived diagnostic of the since-removed full overlap mode,
+            # not the shipped config — labeled and excluded from bracketing
             proto += " (pipeline=full diagnostic)"
         rows.append(
             f"| {os.path.basename(p)} | {'→'.join(cfgs)} "
@@ -852,7 +842,7 @@ def _bracket_partner(protocol: str, events: int) -> dict | None:
             # PARTIAL stamps (throttled windows, aborted marathons) record
             # host conditions, not engine scaling — never a bracket side
             or "PARTIAL" in str(d.get("stamp", ""))
-            # pipeline=full diagnostics measure a non-shipped overlap mode
+            # archived pipeline=full diagnostics measure a removed mode
             or d.get("pipeline", "commit") == "full"
         ):
             continue

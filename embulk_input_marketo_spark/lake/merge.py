@@ -673,10 +673,10 @@ def _commit_mor(
     salt_buckets: int | None,
 ) -> MergeResult:
     """merge-on-read COMMIT: driver bookkeeping + atomic manifest swap for a
-    :class:`StagedMerge`, against manifest ``m`` (the caller's base — the
-    synchronous path passes the same manifest it staged under; the pipelined
-    path passes a FRESH read so commits rebase onto whatever landed since
-    staging)."""
+    :class:`StagedMerge`, against manifest ``m`` (the caller's base —
+    :func:`merge_batch` passes the same manifest it staged under;
+    :func:`commit_staged_merge` passes a FRESH read so commits rebase onto
+    whatever landed since staging)."""
     rows_in = staged.rows_in
     rows_deleted = staged.rows_deleted
     rows_null_key = staged.rows_null_key
@@ -792,13 +792,10 @@ def stage_merge(
     half of a write-ahead pipeline. Pair with :func:`commit_staged_merge`,
     which publishes staged batches strictly in order.
 
-    Because the staged data never becomes visible until its commit, two
-    staged writes may run CONCURRENTLY (Spark schedules both jobs' tasks,
-    the later job filling slots the earlier one's straggler tail leaves
-    idle) — that is the point: on the replay path the next slice's write
-    overlaps the previous slice's commit bookkeeping and stage tails, which
-    are otherwise pure idle on a wide cluster (measured 10-15% of replay
-    wall at 8 cores; ``replay(pipeline=True)``).
+    The staged data stays invisible until its commit, so a caller may run
+    the next batch's stage while the previous commit's driver bookkeeping
+    is still in flight (``replay(pipeline=True)``); ``replay()`` never runs
+    two stages at once.
 
     ``label``: the version number used to NAME the staging dir. It must stay
     ABOVE the table's committed frontier until this stage commits (expiry's

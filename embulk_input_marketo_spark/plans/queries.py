@@ -65,35 +65,50 @@ def _events_as_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_cdc_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAGSHIP: full engine replay — changelog → sliced batches → salted LWW
-    dedup → manifest-gated MERGE into a lake table → read final state."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
-    from embulk_input_marketo_spark.replay import replay
-
-    log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    # throwaway lake on tmpfs when available: the query's cost should be the
-    # replay plan, not the sandbox's intermittently-throttled virtio disk;
-    # the caller still holds a lazy DataFrame over it, so reclaim at exit
+def _scratch_dir(prefix: str) -> str:
+    """A throwaway dir on tmpfs when available: the query's cost should be
+    its plan, not disk latency. The caller still holds a lazy DataFrame
+    over it, so it is reclaimed at exit."""
     path = tempfile.mkdtemp(
-        prefix="lake_q_",
+        prefix=prefix,
         dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
     )
     atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
+    return path
+
+
+def _events_schema(with_ts: bool = True):
+    """The row schema of :func:`_events_as_changelog` (op/lsn excluded);
+    the WAL envelopes carry ``warc_ts`` outside the row image."""
+    from pyspark.sql import types as T
+
+    fields = [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+    return T.StructType([f for f in fields if with_ts or f.name != "warc_ts"])
+
+
+def _events_lake(prefix: str, name: str = "web_pages", **create):
+    """A fresh 8-bucket lake table over :func:`_events_schema`, keyed on
+    url with warc_ts as the LWW major, in its own :func:`_scratch_dir`."""
+    from embulk_input_marketo_spark.lake import LakeTable
+
+    return LakeTable.create(
+        f"{_scratch_dir(prefix)}/{name}", _events_schema(),
+        key_col="url", lww_major="warc_ts", n_buckets=8, **create,
     )
+
+
+def q_cdc_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FLAGSHIP: full engine replay — changelog → sliced batches → salted LWW
+    dedup → manifest-gated MERGE into a lake table → read final state."""
+    from embulk_input_marketo_spark.replay import replay
+
+    log = _events_as_changelog(spark, sf_dir)
+    table = _events_lake("lake_q_")
     # batch span derived from the lsn bounds replay computes anyway (no extra
     # full scan — a count() here used to add one more job over the changelog).
     # 2 slices: still a multi-slice replay (slice boundaries, idempotent
@@ -132,29 +147,10 @@ def q_cdc_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     then diff the snapshots — insert/update/delete per key, candidate
     buckets from a pure metadata pointer diff. Oracle: the same diff
     computed independently as two LWW prefix states over the raw events."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_cdf_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _events_lake("lake_cdf_")
     replay(spark, log.where(F.col("lsn") <= 5000), table, n_slices=1)
     v1 = table.current_version()
     replay(spark, log, table, n_slices=1)
@@ -220,29 +216,10 @@ def q_cdc_changes_preimage(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc_changes_feed, but updates emit (update_preimage, update_postimage)
     row pairs so incremental consumers can retract the old contribution.
     Oracle: the two-prefix LWW diff emitting both sides of each update."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_cdfpre_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _events_lake("lake_cdfpre_")
     replay(spark, log.where(F.col("lsn") <= 5000), table, n_slices=1)
     v1 = table.current_version()
     replay(spark, log, table, n_slices=1)
@@ -316,29 +293,10 @@ def q_time_travel_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled-back suffix must leave no trace. The checkpoint rolls back with
     the data, so a resumed replay re-ingests exactly the suffix (pytest
     asserts the convergence half)."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_restore_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _events_lake("lake_restore_")
     replay(spark, log.where(F.col("lsn") <= 5000), table, n_slices=1)
     v1 = table.current_version()
     replay(spark, log, table, n_slices=1)
@@ -378,21 +336,13 @@ def q_wal_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the oracle, which projects the same changelog directly from the
     raw events (never touching JSON). ts lands at Debezium's millisecond
     precision on both sides."""
-    from pyspark.sql import types as T
-
     from embulk_input_marketo_spark.sources.debezium import (
         parse_debezium,
         to_debezium,
     )
 
     log = _events_as_changelog(spark, sf_dir)
-    row_schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+    row_schema = _events_schema(with_ts=False)
     wire = to_debezium(
         log.select("op", "url", "value", "props", "lsn", "warc_ts"),
         row_cols=["url", "value", "props"],
@@ -429,8 +379,6 @@ def q_wal_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     map<string,string> and votes a conservative type per unknown field.
     Oracle: the drift summary computed directly from the raw events (name,
     voted type, first lsn carrying the field, occurrence count)."""
-    from pyspark.sql import types as T
-
     from embulk_input_marketo_spark.sources.debezium import (
         discover_schema_drift,
         to_debezium,
@@ -455,13 +403,7 @@ def q_wal_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_cols=["url", "value", "props", "lang", "hit_count"],
         lsn_col="lsn",
     )
-    known = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+    known = _events_schema(with_ts=False)
     return discover_schema_drift(wire, known).select(
         "field_name", "field_type", "first_lsn", "n_seen"
     )
@@ -1114,11 +1056,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant the minhash/simhash oracles pin). Oracle: text-equality
     EXISTS checks against the corpus and against earlier batch ids."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    path = tempfile.mkdtemp(
-        prefix="mh_index_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = _scratch_dir("mh_index_")
     index_path = f"{path}/minhash_index"
     dedup_docs.write_minhash_index(docs, index_path)
 
@@ -1354,11 +1292,7 @@ def q_ann_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    path = tempfile.mkdtemp(
-        prefix="ann_idx_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = _scratch_dir("ann_idx_")
     idx = f"{path}/index"
     similarity.write_ann_index(
         emb, idx, dim=64, n_planes=6, n_tables=8
@@ -2969,9 +2903,6 @@ def q_cdf_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone — the base table is never re-read. The oracle recomputes the
     final rollup from scratch over the raw events, so any pre-image error
     (missing, duplicated, mis-signed) lands as a value mismatch."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.incremental import (
         incremental_agg_delta,
         merge_agg_delta,
@@ -2979,23 +2910,7 @@ def q_cdf_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_iagg_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _events_lake("lake_iagg_")
     grp = (F.col("url").cast("long") % 16).alias("grp")
     # integer-exact measure (the token_frequency_stats discipline): floor of
     # a fixed-point scaling, so sums are associative and engine-independent
@@ -3054,30 +2969,11 @@ def q_time_window_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose FINAL crawl falls outside the window is absent — never served at
     an older in-range version (the MoR-soundness rule in table._read_raw).
     Oracle: the final LWW state filtered by the same closed ts range."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.merge import compact_buckets
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_twin_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _events_lake("lake_twin_")
     replay(spark, log, table, n_slices=2)
     compact_buckets(spark, table, list(range(8)))
     import datetime as _dt
@@ -3125,33 +3021,14 @@ def q_cdf_follower_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read afterwards. Oracle: full recompute of the final rollup from the
     raw events — a lost, doubled, or mis-signed slice anywhere across the
     three maintains lands as a value mismatch."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.follow import ChangeFeedFollower
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_follow_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _events_lake("lake_follow_")
     follower = ChangeFeedFollower(
         table,
-        f"{path}/follower_state",
+        f"{os.path.dirname(table.path)}/follower_state",
         group_exprs=[(F.col("url").cast("long") % 16).alias("grp")],
         group_names=["grp"],
         measure=F.coalesce(
@@ -3382,29 +3259,10 @@ def q_key_exists_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Probe set (deterministic, from events): every user_id ≡ 0 (mod 3) as a
     present-or-deleted probe, and the NEGATED user_ids ≡ 0 (mod 7) as
     guaranteed-absent probes."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_bloom_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8, bloom_bits=1 << 17,
-    )
+    table = _events_lake("lake_bloom_", bloom_bits=1 << 17)
     replay(spark, log, table, n_slices=2, salt_buckets=8)
     ev = _t(spark, sf_dir, "events")
     probes = (
@@ -3536,35 +3394,18 @@ def q_cdc_mirror_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first, incremental CDF slices after), then read the REPLICA. The
     replica is maintained change-proportionally — exactly-once via its
     channel watermark — and must equal the source's LWW final state."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.mirror import create_mirror, sync_mirror
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_mirror_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    src = LakeTable.create(
-        f"{path}/src", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    src = _events_lake("lake_mirror_", name="src")
     holder: dict = {}
 
     def on_batch(_result) -> None:
         if "dst" not in holder:
-            holder["dst"] = create_mirror(src, f"{path}/dst", n_buckets=4)
+            holder["dst"] = create_mirror(
+                src, f"{os.path.dirname(src.path)}/dst", n_buckets=4
+            )
         sync_mirror(spark, src, holder["dst"])
 
     replay(spark, log, src, n_slices=2, salt_buckets=8, on_batch=on_batch)
@@ -3588,30 +3429,11 @@ def q_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     with value > 60.0 — matching rows become order-key-preserving tombstones
     with scrubbed payloads, only their buckets rewrite. The read-back is
     the final state minus the deleted rows."""
-    from pyspark.sql import types as T
-
-    from embulk_input_marketo_spark.lake import LakeTable
     from embulk_input_marketo_spark.lake.merge import delete_where
     from embulk_input_marketo_spark.replay import replay
 
     log = _events_as_changelog(spark, sf_dir)
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    path = tempfile.mkdtemp(
-        prefix="lake_del_",
-        dir="/dev/shm" if os.path.isdir("/dev/shm") else None,
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    table = LakeTable.create(
-        f"{path}/web_pages", schema, key_col="url", lww_major="warc_ts",
-        n_buckets=8,
-    )
+    table = _events_lake("lake_del_")
     replay(spark, log, table, n_slices=2, salt_buckets=8)
     delete_where(spark, table, F.col("value") > 60.0)
     return table.read(spark).select(

@@ -12,6 +12,8 @@ a single-threaded CSV loop (the reference's data plane is one task,
 
 from __future__ import annotations
 
+import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -19,7 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from embulk_input_marketo_spark.checkpoint import batch_id_for, resume_hwm
-from embulk_input_marketo_spark.lake.merge import MergeResult, merge_batch
+from embulk_input_marketo_spark.lake import fsio
+from embulk_input_marketo_spark.lake.merge import (
+    MergeResult,
+    StagedMerge,
+    commit_staged_merge,
+    merge_batch,
+    stage_merge,
+)
 from embulk_input_marketo_spark.lake.table import LakeTable
 from embulk_input_marketo_spark.operators.dedup import lww_dedup
 from embulk_input_marketo_spark.operators.windows import bounded_scan, slice_range
@@ -58,8 +67,7 @@ def replay(
     registry: SchemaRegistry | None = None,
     max_batches: int | None = None,
     on_batch: Callable[[MergeResult], Any] | None = None,
-    prefetch: bool = False,
-    pipeline: bool | str = False,
+    pipeline: bool = False,
     bloom_fast_path: bool = False,
 ) -> ReplayReport:
     """Replay the changelog into the table from the committed checkpoint.
@@ -69,44 +77,25 @@ def replay(
     - The window splits into ≤``batch_span`` half-open slices (C2); each is
       LWW-deduped, schema-reconciled and merged with an idempotent batch_id —
       killing the process anywhere and re-running converges (C3/C7).
-    - ``prefetch`` (default OFF — measured and rejected at bench shape):
-      pipeline slice k+1's changelog SCAN under slice k's merge (persist +
-      materialize on a background thread, kicked shortly AFTER the merge
-      job is submitted so FIFO keeps the merge's priority). Measured
-      same-window A/B at 8 cores / 10M events: occupancy ROSE 0.80→0.88
-      but throughput FELL ~330k→~280k ev/s — on local tmpfs the scan is
-      already a memcpy, so the cache materialization adds a full extra
-      copy of the decoded slice (html included) to a memory-bandwidth
-      budget the write path needs more. The knob stays because the
-      tradeoff inverts when the scan is REMOTE (S3/HDFS object reads
-      under compute is the classic ingest pipeline overlap); the cache
-      holds only RAW slice rows, so it is valid under schema
-      reconcile/renames (both apply downstream) and drops as each slice
-      commits.
-    - ``pipeline`` (mor only, ignored when a ``registry`` is given):
-      write-ahead replay — slice k's data is staged to a private dir
-      (lake/merge.stage_merge), the commit publishes strictly in slice order
-      on a side thread while slice k+1's write job already runs
-      (commit_staged_merge). ``True`` overlaps the COMMIT bookkeeping only
-      (never two cluster jobs at once); ``"full"`` additionally overlaps
-      adjacent slices' write jobs — see :func:`_replay_pipelined` for the
-      measured tradeoff. Unlike ``prefetch`` this adds NO extra copy of the
-      slice — it reorders already-necessary work into idle the commit gap
-      (and, for "full", stage straggler tails) leaves: measured 10-15% of
-      replay wall at 8 cores, and pure scaling loss — the same absolute
-      driver latency hides behind 4x longer compute at a quarter the cores.
-      Crash/idempotence semantics are unchanged — an uncommitted staged dir
-      is invisible (expiry's in-flight guard skips it) and a rerun
-      converges from the committed hwm exactly as before.
+    - mor slices are staged (lake/merge.stage_merge) and then committed
+      (commit_staged_merge). ``pipeline`` (mor only, ignored when a
+      ``registry`` is given) hands each commit to one side thread, so slice
+      k's commit bookkeeping (footer stats, manifest build, fsync; on a
+      cluster the catalog round-trip) runs under slice k+1's write job.
+      Those are absolute driver costs that surface as idle at wide
+      parallelism — measured 10-15% of replay wall at 8 cores, which is why
+      the option is kept. On a 4-core host at 3 slices the overlap does not
+      pay for itself: perfbench/README.md measured ``backfill_sequential``
+      9% faster than ``bulk_backfill``. Commits publish strictly in slice
+      order, so crash and rerun semantics are the inline path's; an
+      uncommitted staged dir is invisible (expiry's in-flight guard skips
+      it).
     - ``bloom_fast_path`` (cow mode with key blooms enabled): probe each
       slice's keys against the per-bucket blooms before the fold — buckets
       whose keys are all provably absent append instead of read+rewrite
       (``lake/merge.merge_batch``). The insert-heavy crawl-frontier knob;
       a no-op for mor (mor never reads base data on merge).
     """
-    import threading
-    import time as _time
-
     hwm = resume_hwm(table)
     row = changelog.agg(F.max("lsn").alias("mx")).collect()[0]
     max_lsn = row["mx"] if row["mx"] is not None else -1
@@ -117,90 +106,111 @@ def replay(
         # derive the span from the lsn bounds this function already computed —
         # callers wanting "K slices" need no extra count() scan of their own
         batch_span = max(-(-(max_lsn - hwm) // n_slices), 1)
+    slices = list(slice_range(hwm, max_lsn, batch_span))[:max_batches]
 
-    slices = list(slice_range(hwm, max_lsn, batch_span))
-
-    if pipeline and registry is None and mode == "mor":
-        if max_batches is not None:
-            slices = slices[:max_batches]
-        return _replay_pipelined(
-            spark, changelog, table, slices, hwm, salt_buckets,
-            compact_threshold, extract_text_from_html, on_batch,
-            depth="full" if pipeline == "full" else "commit",
-        )
-
-    prefetched: dict[tuple[int, int], DataFrame] = {}
-
-    def _kick_prefetch(nxt: tuple[int, int], delay: float = 2.0) -> None:
-        # persist, then materialize AFTER a short delay: the current slice's
-        # merge job must reach the scheduler first (FIFO gives the earlier
-        # job priority whenever it has pending tasks, so the prefetch only
-        # ever fills slots the merge releases — gaps and straggler tails)
-        df = bounded_scan(changelog, *nxt).persist()
-        prefetched[nxt] = df
-
-        def run() -> None:
-            _time.sleep(delay)
-            try:
-                df.count()
-            except Exception:
-                pass  # cancelled/failed prefetch degrades to a direct scan
-
-        threading.Thread(target=run, daemon=True).start()
-
+    overlap = pipeline and mode == "mor" and registry is None
     report = ReplayReport(start_hwm=hwm, end_hwm=hwm)
-    for i, (lo, hi) in enumerate(slices):
-        if max_batches is not None and len(report.batches) >= max_batches:
-            break
-        if registry is not None:
-            registry.reconcile(table, up_to_lsn=hi)
+    m0 = table.manifest()
+    staged_by_idx: dict[int, StagedMerge] = {}  # staged, not yet consumed
 
-        window_df = prefetched.get((lo, hi)) or bounded_scan(changelog, lo, hi)
-        will_process_next = (
-            prefetch
-            and i + 1 < len(slices)
-            and (max_batches is None or len(report.batches) + 1 < max_batches)
-        )
-        if will_process_next and slices[i + 1] not in prefetched:
-            _kick_prefetch(slices[i + 1])
-        m = table.manifest()
-        batch, derive = _project_slice(
-            window_df, m, extract_text_from_html, mode
-        )
-        if mode == "cow":
-            # CoW folds base data every commit — pre-reduce to one row per
-            # key first so the union the merge reduces over stays small
-            batch = lww_dedup(
-                batch,
-                key_cols=m.key_col,
-                order_cols=[m.lww_major, "_lsn"],
-                salt_buckets=salt_buckets,
-            )
-        # mor: append raw (LSM-style); the threshold compaction + read-time
-        # reduce own the dedup work, amortized and parallel
-        result = merge_batch(
-            spark,
-            table,
-            batch,
-            batch_id=batch_id_for(table.path, lo, hi),
-            salt_buckets=salt_buckets,
-            mode=mode,
-            compact_threshold=compact_threshold,
-            checkpoint={"hwm_lsn": hi},
-            window=(lo, hi),
-            lineage={"lsn_lo": lo, "lsn_hi": hi, "source": "changelog"},
-            derive=derive,
-            bloom_fast_path=bloom_fast_path,
-        )
+    def record(hi: int, result: MergeResult) -> None:
         report.batches.append(result)
-        if (lo, hi) in prefetched:
-            prefetched.pop((lo, hi)).unpersist(blocking=False)
         if result.applied:
             report.end_hwm = hi
         if on_batch:
             on_batch(result)
-    for df in prefetched.values():  # early exits (max_batches) leak nothing
-        df.unpersist(blocking=False)
+
+    def do_commit(i: int, staged: StagedMerge) -> None:
+        lo, hi = slices[i]
+        try:
+            result = commit_staged_merge(
+                spark, table, staged,
+                batch_id=batch_id_for(table.path, lo, hi),
+                mode=mode,
+                compact_threshold=compact_threshold,
+                checkpoint={"hwm_lsn": hi},
+                window=(lo, hi),
+                lineage={"lsn_lo": lo, "lsn_hi": hi, "source": "changelog"},
+                salt_buckets=salt_buckets,
+            )
+        except BaseException:
+            # a commit that failed AFTER publishing the stage (e.g. in its
+            # auto-compaction) consumed the dir — an inline stage is
+            # published in place, so it must not be reclaimed. Anything
+            # earlier leaves the claim for the cleanup below
+            if table.current_version() >= staged.label:
+                staged_by_idx.pop(i, None)
+            raise
+        staged_by_idx.pop(i, None)  # published, or reclaimed by the commit
+        record(hi, result)
+
+    pending = None
+    try:
+        with ThreadPoolExecutor(max_workers=1) as commit_pool:
+            for i, (lo, hi) in enumerate(slices):
+                if registry is not None:
+                    registry.reconcile(table, up_to_lsn=hi)
+                m = m0 if overlap else table.manifest()
+                batch, derive = _project_slice(
+                    bounded_scan(changelog, lo, hi), m, extract_text_from_html,
+                    mode,
+                )
+                if mode == "cow":
+                    # CoW folds base data every commit — pre-reduce to one row
+                    # per key first so the union the merge reduces over stays
+                    # small
+                    batch = lww_dedup(
+                        batch,
+                        key_cols=m.key_col,
+                        order_cols=[m.lww_major, "_lsn"],
+                        salt_buckets=salt_buckets,
+                    )
+                    result = merge_batch(
+                        spark,
+                        table,
+                        batch,
+                        batch_id=batch_id_for(table.path, lo, hi),
+                        salt_buckets=salt_buckets,
+                        mode=mode,
+                        compact_threshold=compact_threshold,
+                        checkpoint={"hwm_lsn": hi},
+                        window=(lo, hi),
+                        lineage={"lsn_lo": lo, "lsn_hi": hi,
+                                 "source": "changelog"},
+                        derive=derive,
+                        bloom_fast_path=bloom_fast_path,
+                    )
+                    record(hi, result)
+                    continue
+                # mor: append raw (LSM-style); the threshold compaction +
+                # read-time reduce own the dedup work, amortized and parallel.
+                # An overlapped stage is labeled with headroom: each in-order
+                # commit advances ≤2 versions (merge + auto-compaction) and at
+                # most one commit is in flight, so +3 per slice keeps every
+                # UNCOMMITTED staging dir above the committed frontier — the
+                # property expiry's in-flight-writer guard relies on. The
+                # commit renames the dir to the version it actually lands at
+                # (inline, the default label already is that version).
+                staged_by_idx[i] = staged = stage_merge(
+                    spark, table, batch, manifest=m, salt_buckets=salt_buckets,
+                    derive=derive,
+                    label=m.version + 3 * (i + 1) if overlap else None,
+                )
+                if overlap:
+                    if pending is not None:
+                        pending.result()  # surface commit errors before going on
+                    pending = commit_pool.submit(do_commit, i, staged)
+                else:
+                    do_commit(i, staged)
+            if pending is not None:
+                pending.result()
+    finally:
+        # the pool's exit waited for any in-flight commit (threads can't be
+        # cancelled mid-write); an error path must not leak a staged dir
+        # that no commit attempt consumed
+        for s in staged_by_idx.values():
+            if s.staging:
+                fsio.remove_dir(s.staging)
     return report
 
 
@@ -256,154 +266,3 @@ def _project_slice(
         else:
             batch = batch.withColumn("text", extract_text(F.col("html")))
     return batch, derive
-
-
-def _replay_pipelined(
-    spark: SparkSession,
-    changelog: DataFrame,
-    table: LakeTable,
-    slices: list[tuple[int, int]],
-    hwm: int,
-    salt_buckets: int | None,
-    compact_threshold: int,
-    extract_text_from_html: bool,
-    on_batch: Callable[[MergeResult], Any] | None,
-    depth: str = "commit",
-) -> ReplayReport:
-    """Write-ahead replay: slice k+1's work runs CONCURRENTLY with slice k's
-    commit; commits publish strictly in slice order (so hwm monotonicity,
-    the window idempotence gate, and crash-rerun convergence are exactly the
-    sequential path's).
-
-    Why this is the scaling-correct shape: the per-commit driver latency
-    (footer stats, manifest build, fsync) and each write stage's straggler
-    tail are ABSOLUTE costs — at 4x the cores the compute that used to hide
-    them is 4x shorter, so they surface as pure wide-config idle (profiled:
-    10-15% of replay wall at 8 cores vs ~3% at 2). Overlapping the next
-    slice's already-necessary work into that idle removes the serial
-    fraction instead of amortizing it. On a 1000-executor cluster the same
-    overlap hides the catalog round-trip per commit.
-
-    ``depth`` picks how much overlaps:
-
-    - ``"commit"`` (the ``pipeline=True`` default): slice k's COMMIT
-      bookkeeping runs on a side thread under slice k+1's write job; at most
-      one cluster job at a time, so no extra memory-bandwidth contention —
-      this reclaims the driver gap only.
-    - ``"full"``: additionally stages slice k+1's WRITE JOB concurrently
-      with slice k's (lookahead exactly 1 — deeper adds concurrent-shuffle
-      memory pressure with no more idle to fill), filling straggler tails
-      too. Measured on the single-box bench (8 pinned cores, 10M events,
-      interleaved A/B x3): occupancy 0.85→0.94-0.97, gap 2.4s→0.6-1.2s,
-      partial 3.0-3.8s→0.9-2.0s — but throughput FELL 5-15%: two concurrent
-      16M-row write jobs inflate total task time ~30% on this
-      bandwidth-capped host (same failure mode as the rejected scan
-      prefetch). Kept because the tradeoff inverts when per-task time is
-      NOT bandwidth-bound — real executors with their own memory channels,
-      or remote-object-store scans — which is exactly where straggler tails
-      dominate."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from embulk_input_marketo_spark.lake import fsio
-    from embulk_input_marketo_spark.lake.merge import (
-        commit_staged_merge,
-        stage_merge,
-    )
-
-    report = ReplayReport(start_hwm=hwm, end_hwm=hwm)
-    if not slices:
-        return report
-    m0 = table.manifest()
-
-    def stage(i: int):
-        lo, hi = slices[i]
-        batch, derive = _project_slice(
-            bounded_scan(changelog, lo, hi), m0, extract_text_from_html, "mor"
-        )
-        # label headroom: each in-order commit advances ≤2 versions (merge +
-        # auto-compaction) and at most one stage runs ahead, so +3 per slice
-        # keeps every UNCOMMITTED staging dir above the committed frontier —
-        # the property expiry's in-flight-writer guard relies on. The commit
-        # renames the dir to the version it actually lands at.
-        return stage_merge(
-            spark, table, batch, manifest=m0, salt_buckets=salt_buckets,
-            derive=derive, label=m0.version + 3 * (i + 1),
-        )
-
-    staged_by_idx: dict[int, Any] = {}  # produced, commit not yet attempted
-
-    def do_commit(i: int, staged) -> None:
-        import os as _os
-
-        try:
-            lo, hi = slices[i]
-            result = commit_staged_merge(
-                spark, table, staged,
-                batch_id=batch_id_for(table.path, lo, hi),
-                compact_threshold=compact_threshold,
-                checkpoint={"hwm_lsn": hi},
-                window=(lo, hi),
-                lineage={"lsn_lo": lo, "lsn_hi": hi, "source": "changelog"},
-                salt_buckets=salt_buckets,
-            )
-        finally:
-            # drop the cleanup claim only once the commit attempt CONSUMED
-            # the dir (success renamed it onto the chain; a no-op / drift /
-            # conflict reclaimed it). A failure upstream of the consume —
-            # or an unexpected one inside it — leaves the claim, and the
-            # replay-level cleanup reclaims the dir
-            if not (staged.staging and _os.path.exists(staged.staging)):
-                staged_by_idx.pop(i, None)
-        report.batches.append(result)
-        if result.applied:
-            report.end_hwm = hi
-        if on_batch:
-            on_batch(result)
-
-    # commits run on ONE worker, submitted (and completion-checked) strictly
-    # in slice order — the report sees them in order and at most one commit
-    # is ever in flight, exactly the sequential path's publish discipline
-    stage_futures: dict[int, Any] = {}
-    stage_pool = ThreadPoolExecutor(max_workers=2) if depth == "full" else None
-    commit_pool = ThreadPoolExecutor(max_workers=1)
-    pending = None
-    try:
-        for i in range(len(slices)):
-            if stage_pool is not None:
-                if i not in stage_futures:
-                    stage_futures[i] = stage_pool.submit(stage, i)
-                if i + 1 < len(slices) and i + 1 not in stage_futures:
-                    stage_futures[i + 1] = stage_pool.submit(stage, i + 1)
-                staged = stage_futures.pop(i).result()
-            else:
-                staged = stage(i)
-            staged_by_idx[i] = staged
-            if pending is not None:
-                pending.result()  # surface commit errors before going deeper
-            pending = commit_pool.submit(do_commit, i, staged)
-        if pending is not None:
-            pending.result()
-            pending = None
-    finally:
-        # an error path must not leak a staged-but-uncommitted dir — wait
-        # for whatever is in flight (threads can't be cancelled mid-write),
-        # then reclaim anything no commit attempt consumed
-        if pending is not None:
-            try:
-                pending.result()
-            except Exception:
-                pass  # already propagating the primary error
-        for f in stage_futures.values():
-            try:
-                s = f.result()
-                if s.staging:
-                    fsio.remove_dir(s.staging)
-            except Exception:
-                pass  # the stage itself failed — nothing durable leaked
-        commit_pool.shutdown(wait=True)
-        if stage_pool is not None:
-            stage_pool.shutdown(wait=True)
-        for s in staged_by_idx.values():
-            if s.staging:
-                fsio.remove_dir(s.staging)
-    return report

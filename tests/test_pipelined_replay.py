@@ -49,14 +49,12 @@ def _state_hash(spark, table):
     return content_hash(table.read(spark).select(*cols), cols)
 
 
-@pytest.mark.parametrize("compact_threshold,depth", [
-    (8, True), (2, True), (8, "full"), (2, "full"),
-])
+@pytest.mark.parametrize("compact_threshold,pipeline", [(8, True), (2, True)])
 def test_pipelined_state_equals_sequential(spark, changelog, tmp_path,
-                                           compact_threshold, depth):
-    """Same changelog through both paths, at both overlap depths (threshold
-    2 forces auto-compaction commits BETWEEN pipelined stage and commit —
-    the version-interleaving case the future-label headroom exists for)."""
+                                           compact_threshold, pipeline):
+    """Same changelog through both paths (threshold 2 forces auto-compaction
+    commits BETWEEN pipelined stage and commit — the version-interleaving
+    case the future-label headroom exists for)."""
     seq = _mk(tmp_path, changelog, "seq")
     pipe = _mk(tmp_path, changelog, "pipe")
     r1 = replay(spark, changelog, seq, batch_span=5_000,
@@ -64,7 +62,7 @@ def test_pipelined_state_equals_sequential(spark, changelog, tmp_path,
                 extract_text_from_html=True)
     r2 = replay(spark, changelog, pipe, batch_span=5_000,
                 compact_threshold=compact_threshold,
-                extract_text_from_html=True, pipeline=depth)
+                extract_text_from_html=True, pipeline=pipeline)
     assert len(r2.batches) == len(r1.batches) == 4
     assert all(b.applied for b in r2.batches)
     assert r2.end_hwm == r1.end_hwm
@@ -80,7 +78,7 @@ def test_pipelined_metadata_invariants(spark, changelog, tmp_path):
     disk (committed generations + MoR-stranded pre-compaction ones, which
     expiry owns) matches the sequential twin's."""
     table = _mk(tmp_path, changelog, "inv")
-    replay(spark, changelog, table, batch_span=5_000, pipeline="full")
+    replay(spark, changelog, table, batch_span=5_000, pipeline=True)
     seq = _mk(tmp_path, changelog, "inv_seq")
     replay(spark, changelog, seq, batch_span=5_000)
     m = table.manifest()
@@ -113,10 +111,12 @@ def test_pipelined_rerun_noops_and_resumes(spark, changelog, tmp_path):
     assert r2.events_applied == 0 and not r2.batches  # skip-batch guard
 
 
+@pytest.mark.parametrize("pipeline", [False, True])
 def test_error_midway_reclaims_inflight_stage(spark, changelog, tmp_path,
-                                              monkeypatch):
-    """Fail the FIRST commit: the lookahead slice is already staged — its
-    dir must be reclaimed, nothing committed, and a plain rerun converges."""
+                                              monkeypatch, pipeline):
+    """Fail the FIRST commit: its slice (and, overlapped, the lookahead
+    slice) is already staged — every staged dir must be reclaimed, nothing
+    committed, and a plain rerun converges."""
     table = _mk(tmp_path, changelog, "crash")
     import embulk_input_marketo_spark.replay as replay_mod
 
@@ -131,7 +131,7 @@ def test_error_midway_reclaims_inflight_stage(spark, changelog, tmp_path,
 
     monkeypatch.setattr(replay_mod, "batch_id_for", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        replay(spark, changelog, table, batch_span=5_000, pipeline=True)
+        replay(spark, changelog, table, batch_span=5_000, pipeline=pipeline)
     monkeypatch.setattr(replay_mod, "batch_id_for", real)
     assert table.manifest().version == 0  # nothing published
     assert glob.glob(os.path.join(table.data_dir, "snap-*")) == []  # reclaimed

@@ -88,14 +88,16 @@ def test_replay_is_idempotent(spark, changelog, tmp_path):
     _assert_state_equals_oracle(spark, table, changelog)
 
 
-def test_kill_and_resume_converges(spark, changelog, tmp_path):
+@pytest.mark.parametrize("pipeline", [False, True])
+def test_kill_and_resume_converges(spark, changelog, tmp_path, pipeline):
     table = LakeTable.create(str(tmp_path / "t"), _schema(changelog),
                              key_col="url", n_buckets=16)
     # simulate a kill after 2 of 5 batches
-    replay(spark, changelog, table, batch_span=4_000, max_batches=2)
+    replay(spark, changelog, table, batch_span=4_000, max_batches=2,
+           pipeline=pipeline)
     assert resume_hwm(table) == 7_999
     # resume to completion
-    replay(spark, changelog, table, batch_span=4_000)
+    replay(spark, changelog, table, batch_span=4_000, pipeline=pipeline)
     _assert_state_equals_oracle(spark, table, changelog)
     ck = checkpoints_df(spark, table)
     # one checkpoint row per MERGE commit (auto-compaction commits — the
