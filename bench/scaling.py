@@ -320,7 +320,7 @@ def worker(
     work = tempfile.mkdtemp(prefix=f"scale_{cores}_", dir=base)
 
     # REAL JVM warm-up, untimed: replay a small slice of the same changelog
-    # through the full pipeline (parquet scan → Arrow UDF → shuffle → lake
+    # through the full pipeline (parquet scan → shuffle → text derive → lake
     # write) into a throwaway table, so C2 JIT compilation of the actual hot
     # paths happens outside the timed window. spark.range(...).count() warms
     # nothing that matters; without this, short wide-config runs spend a
@@ -359,7 +359,7 @@ def worker(
     pinned = set(os.sched_getaffinity(0))
     cpu_a = _cpu_snap(pinned)
     t0 = time.perf_counter()
-    # full pipeline incl. the Arrow-UDF text extraction from html — the
+    # full pipeline incl. the Catalyst text extraction from html — the
     # engine's spec'd ingest shape (text is DERIVED, then byte-verified)
     report = replay(
         spark, log, table,

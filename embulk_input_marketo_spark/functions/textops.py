@@ -1,10 +1,11 @@
-"""Text pipeline over web-page payloads — Arrow-vectorized pandas UDFs only
-(input_hint: "no per-row Python"), plus JVM-side column-function variants of
-everything SQL-expressible.
+"""Text pipeline over web-page payloads: JVM-side column functions only
+(input_hint: "no per-row Python"), so every transform here compiles into
+Catalyst expressions and runs under whole-stage codegen.
 
 The extraction invariant: ``extract_text(html)`` must be byte-identical per
-url against the oracle, so the whole transform is pinned inside ONE pandas UDF
-with explicit UTF-8 decode and no locale-dependent formatting.
+url against the oracle. It is one expression chain with an explicit UTF-8
+repair and an explicit ASCII whitespace class, so no locale or regex-flavour
+default can change its bytes.
 
 Also carries the reference's scalar surface (SURVEY.md §2.6) and adds the
 training-data-pipeline text analysis set: language-ID heuristic, quality
@@ -13,185 +14,32 @@ scoring, token counting, rolling-hash document fingerprinting.
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
-_TAG_RE = re.compile(rb"<[^>]*>")
-_WS_RE = re.compile(rb"\s+")
-
-# ASCII whitespace byte table (== python bytes-\s == bytes.strip() set)
-_WS_BYTE_TABLE = None
+# python's bytes-regex \s: exactly the six ASCII whitespace bytes (Java's \s
+# is the same set, but spelled out so no flag or flavour can widen it)
+_WS_CLASS = "[ \\t\\n\\r\\u000B\\f]+"
 
 
-def _ws_byte_table():
-    global _WS_BYTE_TABLE
-    if _WS_BYTE_TABLE is None:
-        import numpy as np
+def extract_text(html: Column | str) -> Column:
+    """html binary → visible text: strip tags, collapse whitespace, trim.
 
-        t = np.zeros(256, dtype=bool)
-        for b in b" \t\n\r\x0b\x0c":
-            t[b] = True
-        _WS_BYTE_TABLE = t
-    return _WS_BYTE_TABLE
-
-
-def _extract_text_rows(html: pd.Series) -> pd.Series:
-    """Row-at-a-time reference implementation (regex on bytes, then decode
-    with errors='replace'). Kept as (a) the semantics definition the numpy
-    backend is fuzz-tested against and (b) the fallback for batches holding
-    invalid UTF-8, where Arrow string casting cannot represent the
-    replacement-character decode."""
-
-    def one(b):
-        if b is None:
-            return None
-        stripped = _TAG_RE.sub(b" ", bytes(b))
-        collapsed = _WS_RE.sub(b" ", stripped).strip()
-        return collapsed.decode("utf-8", errors="replace")
-
-    return html.map(one)
+    Semantics are those of the bytes reference ``re.sub(rb"\\s+", b" ",
+    re.sub(rb"<[^>]*>", b" ", html)).strip().decode("utf-8",
+    errors="replace")``. Decoding first (``make_valid_utf8`` replaces each
+    maximal invalid subpart with U+FFFD, as python does) gives the same bytes,
+    because both patterns only match ASCII and an ASCII byte always ends an
+    invalid sequence. Runs have already collapsed to one ``' '``, so ``trim``
+    (spaces only) equals ``bytes.strip()``. Null in, null out."""
+    c = F.col(html) if isinstance(html, str) else html
+    text = F.make_valid_utf8(c.cast("string"))
+    text = F.regexp_replace(text, "<[^>]*>", " ")
+    return F.trim(F.regexp_replace(text, _WS_CLASS, " "))
 
 
-def _extract_text_pa(arr):
-    """Arrow-native batch extraction — the replay hot path (every ingested
-    event's html flows through this). ``arr`` is a (Large)BinaryArray;
-    returns a (Large)StringArray.
-
-    Semantics are BYTE-IDENTICAL to :func:`_extract_text_rows` (asserted by
-    tests/fuzz): the regexes involved only ever match ASCII bytes, and in
-    UTF-8 multi-byte sequences never contain ASCII bytes, so byte-level
-    masking equals char-level regex on any valid-UTF-8 input; batches with
-    invalid UTF-8 (detected by one Arrow cast) fall back to the row loop,
-    where python's errors='replace' decode applies.
-
-    Algorithm (numpy over the concatenated value buffer, no per-row Python):
-    - tag spans are SPARSE: find '<'/'>' positions, pair each open with the
-      first close at-or-after it (searchsorted), keep pairs inside one row,
-      and paint the span union via a diff array + one cumsum — the union of
-      [open, first-close] spans equals the union of regex matches, because
-      an open inside an earlier match extends to the same close;
-    - tag bytes and ASCII whitespace both become ' '; runs collapse by
-      keeping only the first byte of each space-run (a run crossing a row
-      boundary only loses a LEADING space the final trim removes anyway);
-    - new row offsets come from a cumsum of the keep mask gathered at the
-      old offsets; leading/trailing single spaces are trimmed by Arrow.
-    """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if arr.offset != 0:
-        # sliced input: the null bitmap below would need bit-shifting —
-        # compact instead (rare; serializers hand over offset-0 arrays)
-        arr = arr.take(np.arange(len(arr), dtype=np.int64))
-    large = pa.types.is_large_binary(arr.type)
-    str_t = pa.large_string() if large else pa.string()
-    try:
-        arr.cast(str_t)  # one-pass UTF-8 validity gate
-    except pa.ArrowInvalid:
-        out = _extract_text_rows(pd.Series(arr.to_pylist(), dtype=object))
-        return pa.array(list(out), type=str_t)
-    n = len(arr)
-    if n == 0:
-        return pa.array([], type=str_t)
-    off_dt = np.int64 if large else np.int32
-    off = np.frombuffer(arr.buffers()[1], dtype=off_dt, count=n + 1)
-    base = int(off[0])
-    data = np.frombuffer(
-        arr.buffers()[2], dtype=np.uint8, count=int(off[-1]) - base,
-        offset=base,
-    )
-    if base:
-        off = (off - base).astype(off_dt)
-    out_cls = pa.LargeStringArray if large else pa.StringArray
-    size = data.shape[0]
-    if size == 0:
-        return out_cls.from_buffers(
-            n, pa.py_buffer(off.tobytes()), pa.py_buffer(b""),
-            arr.buffers()[0], -1, 0,
-        )
-
-    space_like = _ws_byte_table()[data]
-    opens = np.flatnonzero(data == 60)
-    closes = np.flatnonzero(data == 62)
-    if opens.size and closes.size:
-        j = np.searchsorted(closes, opens)
-        valid = j < closes.size
-        ends = closes[np.minimum(j, closes.size - 1)]
-        open_row = np.searchsorted(off, opens, side="right") - 1
-        valid &= ends < off[open_row + 1]  # match must close within the row
-        ov, ev = opens[valid], ends[valid]
-        if ov.size:
-            paint = np.zeros(size + 1, dtype=np.int32)
-            paint[ov] += 1  # opens are unique positions
-            # ends repeat when several opens share a close (nested '<');
-            # ev is nondecreasing, so run-length the repeats and subtract
-            # counts at UNIQUE indices (plain fancy indexing, no slow .at)
-            first = np.empty(ev.size, dtype=bool)
-            first[0] = True
-            np.not_equal(ev[1:], ev[:-1], out=first[1:])
-            ue = ev[first]
-            cnt = np.diff(np.append(np.flatnonzero(first), ev.size))
-            paint[ue + 1] -= cnt.astype(np.int32)
-            in_tag = np.cumsum(paint[:size], dtype=np.int32) > 0
-            space_like |= in_tag
-    keep = np.empty(size, dtype=bool)
-    keep[0] = True
-    np.logical_and(space_like[1:], space_like[:-1], out=keep[1:])
-    np.logical_not(keep[1:], out=keep[1:])
-    out_bytes = np.where(space_like, np.uint8(32), data)[keep]
-    ck = np.zeros(size + 1, dtype=np.int32)
-    np.cumsum(keep, out=ck[1:])
-    new_off = ck[off].astype(off_dt)
-    out = out_cls.from_buffers(
-        n, pa.py_buffer(new_off.tobytes()), pa.py_buffer(out_bytes.tobytes()),
-        arr.buffers()[0], -1, 0,
-    )
-    return pc.utf8_trim(out, " ")
-
-
-def _extract_text_batch(html: pd.Series) -> pd.Series:
-    """pandas wrapper over :func:`_extract_text_pa` (object-dtype in/out)."""
-    import pyarrow as pa
-
-    return _extract_text_pa(
-        pa.array(html, type=pa.large_binary())
-    ).to_pandas()
-
-
-@pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """html binary → visible text. Deterministic, byte-stable: strip tags,
-    collapse whitespace, UTF-8 decode (errors='replace' is deterministic).
-    Vectorized over Arrow batches; no per-row Python UDF path — the batch
-    kernel runs numpy over the Arrow buffers directly (~2x the row-regex
-    throughput on replay-shaped batches), with the row loop kept only for
-    invalid-UTF-8 batches where replacement-character decode applies."""
-    return _extract_text_batch(html)
-
-
-try:  # Spark ≥ 4.0: Arrow-NATIVE scalar UDF — pa.Array in, pa.Array out.
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf(StringType())
-    def extract_text_arrow(html):
-        """The zero-pandas transport of :func:`extract_text`: the worker
-        hands the kernel the Arrow batch itself, so no per-row Python
-        objects exist on EITHER side of the exchange (the pandas_udf path
-        materializes every html payload as a bytes object and every result
-        as a str before Arrow re-encodes it). Identical bytes out — both
-        call :func:`_extract_text_pa` — this is purely the cheaper ride."""
-        return _extract_text_pa(html)
-
-except ImportError:  # pragma: no cover - older Spark: pandas transport only
-    extract_text_arrow = extract_text
+# the name perfbench/workloads.py imports for its standalone text probe
+extract_text_arrow = extract_text
 
 
 def fingerprint64(col: Column | str) -> Column:

@@ -437,7 +437,9 @@ def merge_batch(
     shuffle as whatever cheap placeholder the batch carries (typically a
     typed null) instead of its materialized value. For wide derived columns
     (extracted text ≈ the html it came from) this nearly halves shuffle
-    bytes, which is pure memory-bandwidth at high core counts. mor only:
+    bytes, which is pure memory-bandwidth at high core counts. A Catalyst
+    derive (``textops.extract_text``) fuses into the write stage's codegen
+    and needs no Python worker. mor only:
     cow folds base rows by LWW, so a placeholder could win a fold and
     persist — there derive is applied BEFORE the merge (no bandwidth win,
     same result). Keys must be current-schema columns.
@@ -615,8 +617,8 @@ def _stage_mor(
     if derive:
         # computed ABOVE the exchange: the shuffle moved the placeholder,
         # the write tasks materialize the real value (plan-audited in
-        # tests/test_round4_fixes.py — the Python-UDF eval node must sit
-        # on the write side of the Exchange)
+        # tests/test_round4_fixes.py — the derive projection must sit on
+        # the write side of the Exchange)
         for name, expr in derive.items():
             write_df = write_df.withColumn(name, expr)
     write_df = write_df.select(*full_cols, "_b")

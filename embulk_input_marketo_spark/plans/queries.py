@@ -977,8 +977,8 @@ def _sql_lang_id() -> str:
 
 def q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The byte-identical extraction invariant (input_hint), inside the gate:
-    build html from documents.text, run the Arrow pandas UDF, compare against
-    a pure-SQL oracle of the same transform."""
+    build html from documents.text, run the Catalyst ``extract_text``
+    expression, compare against a pure-SQL oracle of the same transform."""
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     html = F.encode(
         F.concat(

@@ -246,18 +246,13 @@ def _project_slice(
     batch = window_df.select(*proj, F.col("op"), F.col("lsn").alias("_lsn"))
     derive = None
     if extract_text_from_html and "text" in [f.name for f in cur_fields]:
-        # the engine's own text derivation (input_hint §2.8): Arrow
-        # pandas UDF over the html payload; output must be byte-identical
-        # per url to the oracle's expected text
-        # arrow transport: the Arrow-native twin of the pandas UDF —
-        # same kernel, same bytes, but no per-row python objects on
-        # either side of the worker exchange (textops.extract_text_arrow)
-        from embulk_input_marketo_spark.functions.textops import (
-            extract_text_arrow as extract_text,
-        )
+        # the engine's own text derivation (input_hint §2.8): one Catalyst
+        # expression over the html payload, byte-identical per url to the
+        # oracle's expected text, with no Python worker in the stage
+        from embulk_input_marketo_spark.functions.textops import extract_text
 
         if mode == "mor":
-            # defer to the write tasks (merge_batch derive=) so the
+            # defer to the write tasks (stage_merge derive=) so the
             # bucket shuffle carries a null placeholder, not a second
             # copy of ~the html bytes — shuffle width is the engine's
             # memory-bandwidth hot spot at high core counts

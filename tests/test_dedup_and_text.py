@@ -1,5 +1,7 @@
 """Dedup family, LWW reducer properties, text pipeline, similarity search."""
 
+import re
+
 import pyspark.sql.functions as F
 
 from embulk_input_marketo_spark.functions import similarity, textops
@@ -126,7 +128,28 @@ def test_multimodal_plumbing(spark):
     assert dec[3]["width"] is None
 
 
-# --- extract_text numpy-batch backend ≡ row-regex reference -----------------
+# --- Catalyst extract_text ≡ row-regex reference ---------------------------
+
+_TAG_RE = re.compile(rb"<[^>]*>")
+_WS_RE = re.compile(rb"\s+")
+
+
+def _extract_text_rows(html):
+    """The semantics definition: regex on bytes, then decode with
+    errors='replace' (python's maximal-subpart U+FFFD substitution)."""
+    if html is None:
+        return None
+    collapsed = _WS_RE.sub(b" ", _TAG_RE.sub(b" ", bytes(html))).strip()
+    return collapsed.decode("utf-8", errors="replace")
+
+
+def _assert_catalyst_equals_rows(spark, rows):
+    df = spark.createDataFrame(list(enumerate(rows)), "i: long, html: binary")
+    got = dict(df.select("i", textops.extract_text("html")).collect())
+    for i, html in enumerate(rows):
+        ref = _extract_text_rows(html)
+        assert got[i] == ref, (html, ref, got[i])
+
 
 _XT_EDGES = [
     None, b"", b"<html><body><p>hello  world</p></body></html>",
@@ -138,42 +161,33 @@ _XT_EDGES = [
     b"\x0b only vertical\x0btab", b"<t\nag>across lines</t\nag>",
     b"<", b">", b"<>", b" ", b"x", None, b"", None,
     b"end with space ", b" <a> ", b"a<", b"a<b> <c",
-    b"bad \xff utf8 <b>x</b>",  # whole batch falls back to the row loop
+    b"bad \xff utf8 <b>x</b>",
 ]
 
 
-def test_extract_text_batch_equals_row_reference_edges():
-    import pandas as pd
-
-    s = pd.Series(_XT_EDGES, dtype=object)
-    ref = textops._extract_text_rows(s)
-    got = textops._extract_text_batch(s)
-    for i, (x, y) in enumerate(zip(ref, got)):
-        assert (x is None and y is None) or x == y, (i, _XT_EDGES[i], x, y)
+def test_extract_text_catalyst_equals_row_reference_edges(spark):
+    _assert_catalyst_equals_rows(spark, _XT_EDGES)
 
 
-def test_extract_text_batch_fuzz_equals_row_reference():
+def test_extract_text_catalyst_fuzz_equals_row_reference(spark):
+    """Malformed UTF-8 (truncated, surrogate, overlong, out-of-range, lone
+    continuation, invalid lead), NUL, and the non-ASCII spaces NEL, NBSP and
+    U+3000 — which are NOT whitespace to the bytes reference."""
     import random
-
-    import pandas as pd
 
     rng = random.Random(20260819)
     alphabet = [b"<", b">", b" ", b"\t", b"\n", b"\x0b", b"\x0c", b"\r",
-                b"a", b"bb", b"\xc3\xa9", b"\xff", b"</p>", b"<b>"]
-    for _ in range(200):
-        rows = []
-        for _ in range(rng.randrange(1, 30)):
-            if rng.random() < 0.08:
-                rows.append(None)
-                continue
-            rows.append(b"".join(
-                rng.choice(alphabet) for _ in range(rng.randrange(0, 40))
-            ))
-        s = pd.Series(rows, dtype=object)
-        ref = textops._extract_text_rows(s)
-        got = textops._extract_text_batch(s)
-        for i, (x, y) in enumerate(zip(ref, got)):
-            assert (x is None and y is None) or x == y, (rows[i], x, y)
+                b"a", b"bb", b"\xc3\xa9", b"\xff", b"</p>", b"<b>",
+                b"\xc3", b"\xe2\x82", b"\xed\xa0\x80", b"\xc0\xaf",
+                b"\xf4\x90\x80\x80", b"\x80", b"\xfe", b"\x00",
+                b"\xc2\x85", b"\xc2\xa0", b"\xe3\x80\x80"]
+    rows = [
+        None if rng.random() < 0.05 else b"".join(
+            rng.choice(alphabet) for _ in range(rng.randrange(0, 40))
+        )
+        for _ in range(4000)
+    ]
+    _assert_catalyst_equals_rows(spark, rows)
 
 
 def test_chunk_documents_exact_windows(spark):

@@ -49,9 +49,9 @@ def _state_hash(spark, table):
     return content_hash(table.read(spark).select(*cols), cols)
 
 
-@pytest.mark.parametrize("compact_threshold,pipeline", [(8, True), (2, True)])
+@pytest.mark.parametrize("compact_threshold", [8, 2])
 def test_pipelined_state_equals_sequential(spark, changelog, tmp_path,
-                                           compact_threshold, pipeline):
+                                           compact_threshold):
     """Same changelog through both paths (threshold 2 forces auto-compaction
     commits BETWEEN pipelined stage and commit — the version-interleaving
     case the future-label headroom exists for)."""
@@ -62,7 +62,7 @@ def test_pipelined_state_equals_sequential(spark, changelog, tmp_path,
                 extract_text_from_html=True)
     r2 = replay(spark, changelog, pipe, batch_span=5_000,
                 compact_threshold=compact_threshold,
-                extract_text_from_html=True, pipeline=pipeline)
+                extract_text_from_html=True, pipeline=True)
     assert len(r2.batches) == len(r1.batches) == 4
     assert all(b.applied for b in r2.batches)
     assert r2.end_hwm == r1.end_hwm

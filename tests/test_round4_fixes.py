@@ -805,11 +805,15 @@ class TestDeriveAfterExchange:
             ),
         )
 
-    def test_plan_puts_udf_eval_above_exchange(self, spark):
+    def test_plan_puts_udf_eval_above_exchange(self, spark, tmp_path,
+                                               monkeypatch):
         """The construction merge_batch uses — repartition(_b) then
-        withColumn(udf) — must plan the Python eval node on the write side
-        of the Exchange (top of toString), or the 'win' ships full text."""
+        withColumn(derive) — must plan the derived regexp_replace projection
+        on the write side of the Exchange (top of toString), or the 'win'
+        ships full text; and the text-deriving stage_merge write must start
+        no Python worker (no Python eval node anywhere in its plan)."""
         from embulk_input_marketo_spark.functions.textops import extract_text
+        from embulk_input_marketo_spark.lake.merge import stage_merge
 
         df = spark.range(64).select(
             F.concat(F.lit("<body>t"), F.col("id").cast("string"),
@@ -821,9 +825,27 @@ class TestDeriveAfterExchange:
         )
         plan = shaped._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" in plan
-        udf_node = "ArrowEvalPython" if "ArrowEvalPython" in plan else "EvalPython"
-        assert udf_node in plan
-        assert plan.index(udf_node) < plan.index("Exchange")
+        assert "regexp_replace" in plan
+        assert plan.index("regexp_replace") < plan.index("Exchange")
+
+        # capture the DataFrame stage_merge hands to its parquet writer
+        written = []
+        cls = type(df)
+        orig = cls.write
+        monkeypatch.setattr(cls, "write", property(
+            lambda self: written.append(self) or orig.fget(self)
+        ))
+        t = LakeTable.create(
+            str(tmp_path / "p"), self.HSCHEMA, key_col="url",
+            lww_major="warc_ts", n_buckets=4,
+        )
+        stage_merge(spark, t, self._hbatch(spark, 8), lsn_col="lsn",
+                    derive={"text": extract_text(F.col("html"))})
+        plans = [w._jdf.queryExecution().executedPlan().toString()
+                 for w in written]
+        assert any("regexp_replace" in p for p in plans)
+        assert not any("ArrowEvalPython" in p or "BatchEvalPython" in p
+                       for p in plans), plans
 
     def test_mor_derive_matches_precomputed(self, spark, tmp_path):
         from embulk_input_marketo_spark.functions.textops import extract_text
